@@ -31,25 +31,8 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graph_python_spark.plans.iterate import (iterative, loop_shuffle_width,
-                                              materialize)
-
-
-class _Pin:
-    """Rotating localCheckpoint holder (pin new, unpersist old)."""
-
-    def __init__(self):
-        self._prev: list[DataFrame] = []
-
-    def pin(self, *dfs: DataFrame) -> tuple[DataFrame, ...]:
-        out = tuple(df.localCheckpoint(eager=True) for df in dfs)
-        for p in self._prev:
-            try:
-                p.unpersist()
-            except Exception:
-                pass
-        self._prev = list(out)
-        return out
+from graph_python_spark.plans.iterate import (Pinned, iterative,
+                                              loop_shuffle_width, materialize)
 
 
 @iterative
@@ -84,7 +67,7 @@ def hits_fixed(
         .distinct()
     )
     n = vertices.count()
-    pin = _Pin()
+    pin = Pinned()
     auth = None
     with loop_shuffle_width(spark, n) as width:
         w = partitions if partitions is not None else width
@@ -158,7 +141,7 @@ def ppr_fixed(
         seeds.select(F.col("id").alias("i"),
                      F.lit((1.0 - damping) / n_seeds).alias("p"))
     )
-    pin = _Pin()
+    pin = Pinned()
     r = tel.select("i", (F.col("p") / F.lit(1.0 - damping)).alias("v"))  # r_0 = p
     # width bound: support can grow to O(V) <= O(E); sizing by the edge
     # count never under-partitions an expansive graph, while a genuinely
@@ -219,7 +202,7 @@ def ppr_batch(
         seeds.select(F.col("id").alias("s"), F.col("id").alias("i"),
                      F.lit(1.0 - damping).alias("p"))
     )
-    pin = _Pin()
+    pin = Pinned()
     r = tel.select("s", "i", F.lit(1.0).alias("v"))  # r_0 = e_seed
     with loop_shuffle_width(edges.sparkSession, max(et.count(), 1)):
         for _ in range(iterations):
@@ -372,7 +355,7 @@ def katz_fixed(
         .distinct()
     )
     n = vertices.count()
-    pin = _Pin()
+    pin = Pinned()
     with loop_shuffle_width(spark, n) as width:
         w = partitions if partitions is not None else width
         if partitions is not None:
@@ -425,7 +408,7 @@ def eigenvector_fixed(
         .distinct()
     )
     n = vertices.count()
-    pin = _Pin()
+    pin = Pinned()
     with loop_shuffle_width(spark, n) as width:
         w = partitions if partitions is not None else width
         if partitions is not None:
@@ -476,7 +459,7 @@ def _multi_source_distances(
         sources.select(F.col("id").alias("src"), F.col("id").alias("id"),
                        F.lit(0).cast("long").alias("v"))
     )
-    pin = _Pin()
+    pin = Pinned()
     with loop_shuffle_width(spark, max(n_edges, 1)):
         for _ in range(rounds):
             cand = (
@@ -588,7 +571,7 @@ def salsa_fixed(
         .distinct()
     )
     n = vertices.count()
-    pin = _Pin()
+    pin = Pinned()
     with loop_shuffle_width(spark, n) as width:
         w = partitions if partitions is not None else width
         if partitions is not None:

@@ -40,9 +40,11 @@ table rather than the raw edge list:
 At 1000-executor / 100 TB scale the plan holds: the adjacency table stays
 partitioned by src across iterations (per-row arrays bounded by max degree;
 a hub row's explode is one task's sequential scan), the rank vector is the
-only moving state, and power-law dst skew is handled by map-side partial
-aggregation plus the salted two-stage combine in ``operators/blocks.py``
-(⊕ associativity makes partial merges exact).
+only moving state, and power-law dst skew is absorbed by map-side partial
+aggregation: each map task sends at most one partial sum per dst, so a
+hub's reduce input is bounded by the number of map tasks, not by its
+in-degree (⊕ associativity makes partial merges exact; measured balanced
+in BASELINE.md, "hub skew in the PageRank dst aggregate").
 """
 
 from __future__ import annotations
@@ -53,25 +55,8 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graph_python_spark.plans.iterate import (IterationState, loop_conf,
-                                                loop_shuffle_width)
-
-
-class _Pinned:
-    """Rotating localCheckpoint holder: pin new state, unpersist the old."""
-
-    def __init__(self):
-        self.prev: Optional[DataFrame] = None
-
-    def pin(self, df: DataFrame) -> DataFrame:
-        out = df.localCheckpoint(eager=True)
-        if self.prev is not None:
-            try:
-                self.prev.unpersist()
-            except Exception:
-                pass
-        self.prev = out
-        return out
+from graph_python_spark.plans.iterate import (IterationState, Pinned,
+                                                loop_conf, loop_shuffle_width)
 
 
 @dataclass
@@ -155,7 +140,7 @@ def _contrib_loop(adj, teleport, r0, iterations, pinned, contrib=None,
     for k in range(iterations):
         new_contrib = step_fn(contrib)
         if rdiff_cb is not None:
-            new_contrib = pinned.pin(new_contrib)
+            (new_contrib,) = pinned.pin(new_contrib)
             rdiff = rdiff_cb(contrib, new_contrib, k)
             contrib = new_contrib
             iters_done = k + 1
@@ -164,7 +149,7 @@ def _contrib_loop(adj, teleport, r0, iterations, pinned, contrib=None,
         else:
             # fixed-iteration mode: truncate lineage only every few rounds
             if (k + 1) % 3 == 0 or k == iterations - 1:
-                new_contrib = pinned.pin(new_contrib)
+                (new_contrib,) = pinned.pin(new_contrib)
             contrib = new_contrib
             iters_done = k + 1
     return contrib, iters_done
@@ -219,7 +204,7 @@ def pagerank(
             if rdiffs and rdiffs[-1] <= tol:
                 return _finalize(vertices, contrib, teleport), start_iter, rdiffs
 
-    pinned = _Pinned()
+    pinned = Pinned()
 
     def rdiff_cb(old_contrib, new_contrib, k):
         # Σ|r_new - r_old|: teleport cancels; vertices never receiving
@@ -315,7 +300,7 @@ def pagerank_fixed(
         return edges.sparkSession.createDataFrame([], "id long, score double")
     teleport = (1.0 - damping) / n
 
-    pinned = _Pinned()
+    pinned = Pinned()
     with loop_conf(adj.sparkSession), loop_shuffle_width(adj.sparkSession, n):
         contrib, _ = _contrib_loop(adj, teleport, 1.0 / n, iterations, pinned)
     return _finalize(vertices, contrib, teleport)
@@ -341,13 +326,12 @@ def pagerank_weighted_fixed(
     only the O(distinct dst) partial sums.
 
     Measured ablation (22.9M edges / 4M vertices, local[32]): a weighted
-    CSR array loop (``operators/blocks.weighted_adjacency_table`` with
-    damping·w/Σw folded in, explode-of-zipped-arrays fan-out) runs the SAME
-    ~7-8.6 s/iteration as this edge join — the unweighted loop's 4× array
-    win comes from exploding bare long arrays; zipping a weight alongside
-    puts a struct in the explode and gives the gain back — while its 18 s
-    build never amortizes.  Edge form kept; the weighted adjacency builder
-    remains exported for block-level consumers.
+    CSR array loop (aligned neighbor/weight arrays with damping·w/Σw folded
+    in, explode-of-zipped-arrays fan-out) runs the SAME ~7-8.6 s/iteration
+    as this edge join — the unweighted loop's 4× array win comes from
+    exploding bare long arrays; zipping a weight alongside puts a struct in
+    the explode and gives the gain back — while its 18 s build never
+    amortizes.  So the edge form is the only weighted plan.
     """
     spark = edges.sparkSession
     npart = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
@@ -382,7 +366,7 @@ def pagerank_weighted_fixed(
                  * F.col("p")).alias("x"))
         return src.groupBy(F.col("j").alias("i")).agg(F.sum("x").alias("c"))
 
-    pinned = _Pinned()
+    pinned = Pinned()
     with loop_conf(spark), loop_shuffle_width(spark, n):
         contrib, _ = _contrib_loop(None, teleport, r0, iterations, pinned,
                                    step_fn=step_fn)
@@ -428,9 +412,9 @@ def pagerank_incremental(
         .select("i", (F.coalesce(F.col("_s0"), F.lit(1.0 / n))
                       - F.lit(teleport)).alias("c"))
     )
-    pinned = _Pinned()
+    pinned = Pinned()
     with loop_conf(adj.sparkSession), loop_shuffle_width(adj.sparkSession, n):
-        contrib0 = pinned.pin(contrib0)
+        (contrib0,) = pinned.pin(contrib0)
         contrib, _ = _contrib_loop(adj, teleport, 1.0 / n, iterations, pinned,
                                    contrib=contrib0)
     return _finalize(vertices, contrib, teleport)

@@ -31,12 +31,20 @@ def canonical_edges(edges: DataFrame) -> DataFrame:
 
 
 def triangle_count(edges: DataFrame) -> int:
-    return triangles_df(edges).agg(F.count("*").alias("n")).first()["n"]
+    ue = canonical_edges(edges).cache()
+    try:
+        return _close_wedges(ue).agg(F.count("*").alias("n")).first()["n"]
+    finally:
+        ue.unpersist()
 
 
 def triangles_df(edges: DataFrame) -> DataFrame:
-    """One row (a, b, c) per triangle, a<b<c."""
-    ue = canonical_edges(edges).cache()
+    """One row (a, b, c) per triangle, a<b<c.  The canonical edge table
+    stays cached for the caller's lazy result."""
+    return _close_wedges(canonical_edges(edges).cache())
+
+
+def _close_wedges(ue: DataFrame) -> DataFrame:
     e1 = ue.select(F.col("a"), F.col("b"))
     e2 = ue.select(F.col("a").alias("b"), F.col("b").alias("c"))
     e3 = ue.select(F.col("a"), F.col("b").alias("c"))

@@ -39,8 +39,7 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.iterate import loop_shuffle_width, materialize
-from .centrality import _Pin
+from ..plans.iterate import Pinned, loop_shuffle_width, materialize
 from .pagerank import pagerank_fixed
 
 
@@ -68,7 +67,7 @@ def _seeded_fixed(
         seeds.select(F.col("id").alias("i"),
                      F.lit((1.0 - damping) * seed_weight).alias("p"))
     )
-    pin = _Pin()
+    pin = Pinned()
     r = tel.select("i", F.lit(seed_weight).alias("v"))
     with loop_shuffle_width(edges.sparkSession, max(et.count(), 1)):
         for _ in range(iterations):

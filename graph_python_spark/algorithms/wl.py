@@ -10,10 +10,11 @@ vertex classification / graph dedup at corpus scale.
 Scale shape: each round is ONE join of the label vector to the
 symmetrized edge list on the neighbor key plus ONE groupBy(vertex)
 collecting the neighbor-label list (map-side partials; the list is
-sorted array-locally, and its length is the vertex degree — the same
-bounded-hub-row caveat as the adjacency cache, see
-``operators/blocks.py``).  Labels are md5 hex — engine-replayable, so a
-fixed-round unroll is expressible in ANSI SQL for the oracle.
+sorted array-locally, and its length is the vertex degree: a hub's list
+is one array cell, unlike the chunked hub rows of
+``operators/blocks.adjacency_table``).  Labels are md5 hex —
+engine-replayable, so a fixed-round unroll is expressible in ANSI SQL for
+the oracle.
 """
 
 from __future__ import annotations

@@ -1,105 +1,21 @@
-"""Blocked-CSR kernels + skew salting — the Arrow/vectorized execution path.
+"""The cached adjacency table: the loop-invariant CSR operand of the
+iterative sweeps (PageRank, components, label propagation).
 
-North-star architecture: "PageRank as iterated semiring SpMV (plus_times
-over block-diagonal CSR shards held in vectorized pandas/Arrow UDFs) ...
-with explicit salted repartitioning for power-law degree skew".
-
-Two kernel families:
-
-  * ``spmv_blocked``  — the generic-semiring SpMV: edges ⋈ vector (one
-    equi-join), then the ⊕-reduction runs INSIDE ``applyInPandas`` over row
-    blocks: each Python worker receives one Arrow batch per block, builds a
-    CSR-style (sorted-row, reduceat-segmented) representation in numpy, and
-    reduces with the semiring's ufunc.  Zero per-row Python — everything is
-    numpy ufunc calls over Arrow-backed arrays.  This is the path for
-    semirings whose ⊕ is NOT a built-in Spark aggregate (custom monoids
-    registered via ``semiring.register``).
-  * ``spmv_salted``   — for built-in ⊕ under power-law dst skew: a two-stage
-    combine, groupBy(dst, salt) partial ⊕ then groupBy(dst) final ⊕.  ⊕
-    associativity makes the split exact; the salt spreads a hub vertex's
-    in-edges over ``n_salts`` reducers.  AQE's skew-join handling does not
-    apply inside iterative loops with a fixed plan, so the salting is
-    explicit (SURVEY.md §4.3 item 3).
-
-Block assignment is ``i % n_blocks`` (hash-like for dense ids) — the same
-block id doubles as the shuffle key, so a block forms exactly one pandas
-group.  At 100 TB, n_blocks tracks executor count × a small factor; each
-block's CSR shard is bounded by maxRecordsPerBatch and fits executor memory.
+``adjacency_table`` groups an edge list into one deduplicated neighbor
+array per source, hash-partitioned by source, built once per job by a numpy
+segment walk over Arrow batches.  The per-iteration SpMV stays a plain
+DataFrame plan: ``explode`` of the arrays feeding a partial + final
+⊕-aggregate, whose map-side combine bounds a hub's reduce input by the
+number of map tasks, not by its in-degree (BASELINE.md, "hub skew in the
+PageRank dst aggregate").
 """
 
 from __future__ import annotations
 
 from typing import Optional
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from graph_python_spark.functions.semiring import Semiring
-from graph_python_spark.operators.vector import VectorFrame
-
-
-def _segment_reduce(keys: np.ndarray, vals: np.ndarray, np_add) -> tuple[np.ndarray, np.ndarray]:
-    """CSR-style segmented ⊕-reduction: sort by key, reduceat over segment
-    starts.  Pure numpy — the vectorized heart of the blocked kernel."""
-    order = np.argsort(keys, kind="stable")
-    k = keys[order]
-    v = vals[order]
-    starts = np.flatnonzero(np.r_[True, k[1:] != k[:-1]])
-    reduced = np_add.reduceat(v, starts)
-    return k[starts], reduced
-
-
-def spmv_blocked(edges: DataFrame, x: VectorFrame, op: Semiring,
-                 n_blocks: int = 32) -> VectorFrame:
-    """y = A·x with the ⊕-reduction in Arrow-batched numpy per row block.
-
-    edges: (i, j, v); x: VectorFrame over j. Result exact for any semiring
-    whose np_add is an associative ufunc (plus/min/max/...).
-    """
-    if op.np_add is None or op.np_mul is None:
-        raise ValueError(f"semiring {op.name} lacks numpy kernels (np_add/np_mul)")
-    np_add, np_mul = op.np_add, op.np_mul
-
-    xdf = x.df.select(F.col("i").alias("_xj"), F.col("v").alias("_xv"))
-    ex = (
-        edges.join(xdf, edges["j"] == xdf["_xj"])
-        .select(F.col("i"), F.col("v").alias("_ev"), F.col("_xv"))
-        .withColumn("_blk", F.pmod(F.col("i"), F.lit(n_blocks)))
-    )
-
-    def reduce_block(pdf: pd.DataFrame) -> pd.DataFrame:
-        ii = pdf["i"].to_numpy()
-        prod = np_mul(pdf["_ev"].to_numpy(dtype=np.float64),
-                      pdf["_xv"].to_numpy(dtype=np.float64))
-        keys, vals = _segment_reduce(ii, np.asarray(prod, dtype=np.float64), np_add)
-        return pd.DataFrame({"i": keys, "v": vals})
-
-    out = ex.groupBy("_blk").applyInPandas(reduce_block, "i long, v double")
-    return VectorFrame(out, x._size)
-
-
-def spmv_salted(edges: DataFrame, x: VectorFrame, op: Semiring,
-                n_salts: int = 16) -> VectorFrame:
-    """y = Aᵀ-push SpMV (aggregate by dst) with two-stage salted ⊕.
-
-    Stage 1 spreads each dst's incoming products across n_salts partial
-    reducers (salt = hash of src — deterministic, no RNG); stage 2 merges
-    partials.  Exact because ⊕ is associative.
-    """
-    xdf = x.df.select(F.col("i").alias("_xi"), F.col("v").alias("_xv"))
-    prods = (
-        edges.join(xdf, edges["i"] == xdf["_xi"])
-        .select(F.col("j"), op.mul(F.col("v"), F.col("_xv")).alias("_m"),
-                F.pmod(F.xxhash64(F.col("i")), F.lit(n_salts)).alias("_salt"))
-    )
-    partial = prods.groupBy("j", "_salt").agg(op.add_agg(F.col("_m")).alias("_p"))
-    out = (
-        partial.groupBy(F.col("j").alias("i"))
-        .agg(op.add_agg(F.col("_p")).alias("v"))
-    )
-    return VectorFrame(out, None)
 
 
 def adjacency_table(edges: DataFrame, src: str = "s", dst: str = "d",
@@ -193,129 +109,3 @@ def adjacency_table(edges: DataFrame, src: str = "s", dst: str = "d",
     # adjacency side.
     built = built.repartition(partitions, "s") if partitions else built.repartition("s")
     return built.cache()
-
-
-def weighted_adjacency_table(edges: DataFrame, src: str = "s",
-                             dst: str = "d", wcol: str = "w",
-                             partitions: Optional[int] = None,
-                             max_chunk: int = 4_000_000) -> DataFrame:
-    """Weighted twin of :func:`adjacency_table`: cached rows
-    ``(s, ds: array<long>, ws: array<double>, deg: long, tw: double)``
-    hash-partitioned by s, with ``ds``/``ws`` aligned (sorted by d,
-    duplicate (s, d) weights plus-combined — ``Matrix.build`` dup_op=plus,
-    reference graphblas/core/matrix.py:643-698), ``deg`` the TOTAL distinct
-    out-degree and ``tw`` the TOTAL out-weight on every chunk row.
-
-    Same hub segmentation and build strategy as the unweighted table
-    (numpy segment walk over Arrow batches after one hash(s) shuffle +
-    in-partition sort); the weight column rides along and duplicate
-    neighbors collapse via ``np.add.reduceat`` over the sorted runs.
-    NB: the batch-walk mechanics (flush buffering, 200k-row yield, the
-    closing repartition that re-asserts hash(s) partitioning) are kept in
-    LOCKSTEP with :func:`adjacency_table` above — change both together;
-    they stay separate functions because the unweighted inner loop
-    (np.unique only) is the measured hot path of every iterative sweep.
-    """
-    import numpy as np
-    import pandas as pd
-
-    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"),
-                     F.col(wcol).cast("double").alias("w"))
-    part = e.repartition(partitions, "s") if partitions else e.repartition("s")
-    sorted_e = part.sortWithinPartitions("s", "d")
-
-    schema = "s long, ds array<long>, ws array<double>, deg long, tw double"
-
-    def build(batches):
-        buf: dict[str, list] = {"s": [], "ds": [], "ws": [], "deg": [], "tw": []}
-        pend_s = None
-        pend_d: list[np.ndarray] = []
-        pend_w: list[np.ndarray] = []
-
-        def flush_group():
-            nonlocal pend_s, pend_d, pend_w
-            if pend_s is not None:
-                dd = np.concatenate(pend_d) if len(pend_d) > 1 else pend_d[0]
-                ww = np.concatenate(pend_w) if len(pend_w) > 1 else pend_w[0]
-                # chunks arrive d-sorted within themselves but not across
-                # batch boundaries; one stable sort restores global order
-                order = np.argsort(dd, kind="stable")
-                dd, ww = dd[order], ww[order]
-                uniq, starts = np.unique(dd, return_index=True)
-                sums = np.add.reduceat(ww, starts)
-                deg = len(uniq)
-                tw = float(sums.sum())
-                for lo in range(0, deg, max_chunk):
-                    buf["s"].append(pend_s)
-                    buf["ds"].append(uniq[lo:lo + max_chunk])
-                    buf["ws"].append(sums[lo:lo + max_chunk])
-                    buf["deg"].append(deg)
-                    buf["tw"].append(tw)
-            pend_s = None
-            pend_d, pend_w = [], []
-
-        for pdf in batches:
-            ss = pdf["s"].to_numpy()
-            dd = pdf["d"].to_numpy()
-            ww = pdf["w"].to_numpy(dtype=np.float64)
-            if len(ss) == 0:
-                continue
-            starts = np.flatnonzero(np.r_[True, ss[1:] != ss[:-1]])
-            bounds = np.r_[starts, len(ss)]
-            for lo, hi in zip(bounds[:-1], bounds[1:]):
-                key = int(ss[lo])
-                if pend_s == key:
-                    pend_d.append(dd[lo:hi])
-                    pend_w.append(ww[lo:hi])
-                else:
-                    flush_group()
-                    pend_s = key
-                    pend_d = [dd[lo:hi]]
-                    pend_w = [ww[lo:hi]]
-            if len(buf["s"]) >= 200000:
-                yield pd.DataFrame(buf)
-                buf = {"s": [], "ds": [], "ws": [], "deg": [], "tw": []}
-        flush_group()
-        if buf["s"]:
-            yield pd.DataFrame(buf)
-
-    built = sorted_e.mapInPandas(build, schema)
-    built = built.repartition(partitions, "s") if partitions else built.repartition("s")
-    return built.cache()
-
-
-def degree_skew_stats(edges: DataFrame, key: str = "j") -> dict:
-    """Skew diagnostics: max/mean degree and the top-degree share —
-    drives the decision to slot spmv_salted into a loop."""
-    deg = edges.groupBy(key).agg(F.count("*").alias("d"))
-    row = deg.agg(
-        F.max("d").alias("max_d"),
-        F.avg("d").alias("mean_d"),
-        F.sum("d").alias("total"),
-    ).first()
-    return {
-        "max_degree": row["max_d"],
-        "mean_degree": float(row["mean_d"]),
-        "max_share": row["max_d"] / row["total"],
-        "skew_ratio": row["max_d"] / max(row["mean_d"], 1e-12),
-    }
-
-
-def blocked_csr_shards(edges: DataFrame, n_blocks: int = 32) -> DataFrame:
-    """Materialize per-block CSR state (the checkpointable representation):
-    one row per (block, row i) holding the column/value arrays sorted by j —
-    i.e. a CSR row shard. This is what IterationState persists per partition.
-    """
-    return (
-        edges.withColumn("_blk", F.pmod(F.col("i"), F.lit(n_blocks)))
-        .groupBy("_blk", "i")
-        .agg(
-            F.array_sort(F.collect_list(F.struct("j", "v"))).alias("_cells"),
-        )
-        .select(
-            F.col("_blk").alias("block"),
-            "i",
-            F.transform(F.col("_cells"), lambda c: c["j"]).alias("cols"),
-            F.transform(F.col("_cells"), lambda c: c["v"]).alias("vals"),
-        )
-    )

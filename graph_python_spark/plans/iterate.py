@@ -105,6 +105,23 @@ def iterative(fn):
     return wrapper
 
 
+class Pinned:
+    """Rotating holder of a loop's pinned state: ``pin`` materializes the
+    new frames and then unpersists the ones pinned before them (without
+    blocking; unpersisting a frame no longer pinned is a no-op).
+    ``pin()`` with no frames releases the last state."""
+
+    def __init__(self):
+        self._held: tuple[DataFrame, ...] = ()
+
+    def pin(self, *dfs: DataFrame) -> tuple[DataFrame, ...]:
+        out = tuple(materialize(df) for df in dfs)
+        for df in self._held:
+            df.unpersist()
+        self._held = out
+        return out
+
+
 class IterationState:
     """Durable per-iteration checkpoint: parquet state + manifest.json.
 

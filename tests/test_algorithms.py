@@ -128,6 +128,17 @@ def test_triangle_count(spark):
     assert triangle_count(both) == 1
 
 
+def test_triangle_count_releases_its_cache(spark):
+    """triangle_count caches the canonical edge table for its self-join and
+    must release it before returning: a leaked cache makes a second call
+    in the same session do less work than the first."""
+    k4 = edge_df(spark, [a for a, b in K4_EDGES], [b for a, b in K4_EDGES])
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    assert triangle_count(k4) == 4
+    assert persistent().size() == before
+
+
 def test_bfs_levels_g7(spark):
     e = edge_df(spark, A7_ROWS, A7_COLS)
     got = {r["id"]: r["level"] for r in bfs_levels(e, source=1).collect()}
